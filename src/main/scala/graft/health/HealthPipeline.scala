@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.ingest._
+import graft.ops.Concurrently
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +14,9 @@ import org.apache.spark.sql.functions._
   * five SCD2 merges) → four gold marts, sequenced by [[PipelineRunner]]
   * exactly like the reference DAG chain
   * (/root/reference/dags/parent_dag.py:21-44 → pyspark_dag.py:67-126 →
-  * bq_dag.py:44-96).
+  * bq_dag.py:44-96). Within a stage, the independent tables (one
+  * hospital's loads, the seven silver tables, the four marts) are
+  * processed concurrently; the stages themselves stay in that order.
   *
   * Storage is path-based parquet under `workRoot`:
   * landing/ audit_log/ pipeline_logs/ bronze/ silver/ gold/.
@@ -68,9 +71,12 @@ final class HealthPipeline(
     * previous run's crash interrupted between delete and rename
     * (graft.ops.TableSwap contract). */
   private def readRecovered(path: String): DataFrame = {
-    graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
+    recover(path)
     spark.read.parquet(path)
   }
+
+  private def recover(path: String): Boolean =
+    graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
 
   /** Write-temp-then-swap (atomic table replace without reading and
     * overwriting the same files in one job); recovers an interrupted
@@ -139,65 +145,91 @@ final class HealthPipeline(
       if (exists(bronzePath(name))) Some(spark.read.parquet(bronzePath(name))) else None
   }
 
-  /** Silver: reload the two type-1 dims, then run each SCD2 merge over
-    * whatever bronze data is present (silver.sql, whole file). */
+  /** Silver (silver.sql, whole file): the two type-1 dims reload and
+    * the five SCD2 entities merge over whatever bronze data is present.
+    *
+    * The seven tables are independent, so they are built and written
+    * concurrently ([[Concurrently]]), in two rounds: first every
+    * unit reads its bronze input and stages its frame, and each SCD2
+    * entity checks its staged types against its standing history; only
+    * when all seven are ready do the seven writes start. A refused
+    * type flip therefore leaves every silver table unchanged. A failure
+    * is rethrown only after every unit of the round has finished. */
   def runSilver(): Unit = {
     val ts = clock()
-    for {
-      ha <- bronzeTable("departments_ha")
-      hb <- bronzeTable("departments_hb")
-    } writeSwap(HealthSilver.departments(ha, hb), silverPath("departments"))
-    for {
-      ha <- bronzeTable("providers_ha")
-      hb <- bronzeTable("providers_hb")
-    } writeSwap(HealthSilver.providers(ha, hb), silverPath("providers"))
+    val dims: Seq[() => Option[() => Unit]] = Seq(
+      () => for {
+        ha <- bronzeTable("departments_ha")
+        hb <- bronzeTable("departments_hb")
+      } yield () => writeSwap(HealthSilver.departments(ha, hb), silverPath("departments")),
+      () => for {
+        ha <- bronzeTable("providers_ha")
+        hb <- bronzeTable("providers_hb")
+      } yield () => writeSwap(HealthSilver.providers(ha, hb), silverPath("providers")))
+    val merges = scd2Entities.map(e => () => prepareMerge(e, ts))
+    Concurrently.all(Concurrently.all(dims ++ merges).flatten)
+    ()
+  }
 
-    scd2Entities.foreach { e =>
-      val bronze = e.bronzeTables.flatMap(t => bronzeTable(t).map(t -> _)).toMap
-      if (bronze.nonEmpty) {
-        val staged = e.stage(bronze)
-        // Refuse a type flip over standing history: merging decimal
-        // staging into float silver (or vice versa, after toggling
-        // spark.graft.decimalMoney mid-history) would NOT fail — the
-        // SCD2 union/join would silently widen back to double and
-        // void the exact-cents contract. Type drift is a migration,
-        // not a merge (Warehouse.appendEvolving's rule).
-        if (exists(silverPath(e.table))) {
-          val tgt = silver(e.table).schema
-          val drift = staged.schema
-            .filter(f => tgt.fieldNames.contains(f.name))
-            .filter(f => tgt(f.name).dataType != f.dataType)
-          if (drift.nonEmpty) throw new IllegalStateException(
-            s"silver.${e.table}: staged column types differ from the existing table " +
-              drift.map(f => s"${f.name}: ${tgt(f.name).dataType.simpleString} -> " +
-                f.dataType.simpleString).mkString("(", ", ", ")") +
-              " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
-        }
-        val target =
-          if (exists(silverPath(e.table))) silver(e.table)
-          else staged
-            .select((e.keyCol +: e.compareCols).map(col): _*)
-            .withColumn("inserted_date", lit(null).cast("timestamp"))
-            .withColumn("modified_date", lit(null).cast("timestamp"))
-            .withColumn("is_current", lit(true))
-            .limit(0)
-        writeSwap(e.merge(lit(ts))(target, staged), silverPath(e.table))
-      }
+  /** Stage one SCD2 entity and return its merge-and-publish step, or
+    * None when none of its bronze inputs landed. */
+  private def prepareMerge(e: HealthSilver.Entity, ts: Timestamp): Option[() => Unit] = {
+    val bronze = e.bronzeTables.flatMap(t => bronzeTable(t).map(t -> _)).toMap
+    if (bronze.isEmpty) None
+    else {
+      val staged = e.stage(bronze)
+      // finish an interrupted swap first: probing before it would
+      // mistake a table whose swap crashed for an absent one and
+      // bootstrap it empty, discarding its history
+      recover(silverPath(e.table))
+      val target =
+        if (exists(silverPath(e.table))) refuseTypeDrift(e.table, silver(e.table), staged)
+        else staged
+          .select((e.keyCol +: e.compareCols).map(col): _*)
+          .withColumn("inserted_date", lit(null).cast("timestamp"))
+          .withColumn("modified_date", lit(null).cast("timestamp"))
+          .withColumn("is_current", lit(true))
+          .limit(0)
+      Some(() => writeSwap(e.merge(lit(ts))(target, staged), silverPath(e.table)))
     }
   }
 
-  /** Gold: the four marts (gold.sql), truncate-and-reload. */
+  /** Refuse a type flip over standing history: merging decimal
+    * staging into float silver (or vice versa, after toggling
+    * spark.graft.decimalMoney mid-history) would NOT fail — the SCD2
+    * union/join would silently widen back to double and void the
+    * exact-cents contract. Type drift is a migration, not a merge
+    * (Warehouse.appendEvolving's rule). Returns `history`. */
+  private def refuseTypeDrift(table: String, history: DataFrame, staged: DataFrame)
+      : DataFrame = {
+    val tgt = history.schema
+    val drift = staged.schema
+      .filter(f => tgt.fieldNames.contains(f.name))
+      .filter(f => tgt(f.name).dataType != f.dataType)
+    if (drift.nonEmpty) throw new IllegalStateException(
+      s"silver.$table: staged column types differ from the existing table " +
+        drift.map(f => s"${f.name}: ${tgt(f.name).dataType.simpleString} -> " +
+          f.dataType.simpleString).mkString("(", ", ", ")") +
+        " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
+    history
+  }
+
+  /** Gold: the four marts (gold.sql), truncate-and-reload. The silver
+    * reads, then the four mart writes, each run concurrently; a failure
+    * is rethrown only after all four writes have finished. */
   def runGold(): Unit = {
-    val p = silver("patients")
-    val e = silver("encounters")
-    val t = silver("transactions")
-    val c = silver("claims")
-    val pr = silver("providers")
-    val d = silver("departments")
-    writeSwap(HealthGold.providerChargeSummary(t, pr, d), goldPath("provider_charge_summary"))
-    writeSwap(HealthGold.patientHistory(p, e, t, c), goldPath("patient_history"))
-    writeSwap(HealthGold.providerPerformance(pr, e, t, c), goldPath("provider_performance"))
-    writeSwap(HealthGold.departmentPerformance(d, e, t), goldPath("department_performance"))
+    val Seq(p, e, t, c, pr, d) = Concurrently.all(
+      Seq("patients", "encounters", "transactions", "claims", "providers", "departments")
+        .map(n => () => silver(n)))
+    Concurrently.all(Seq(
+      () => writeSwap(HealthGold.providerChargeSummary(t, pr, d),
+        goldPath("provider_charge_summary")),
+      () => writeSwap(HealthGold.patientHistory(p, e, t, c), goldPath("patient_history")),
+      () => writeSwap(HealthGold.providerPerformance(pr, e, t, c),
+        goldPath("provider_performance")),
+      () => writeSwap(HealthGold.departmentPerformance(d, e, t),
+        goldPath("department_performance"))))
+    ()
   }
 
   /** The full DAG, one in-process chain with per-stage retry

@@ -21,6 +21,13 @@ final case class TableLoadResult(
   * landing zone → append one audit row. A failing table is audited
   * FAILED and does not stop the run.
   *
+  * [[run]] loads the active tables of one datasource concurrently
+  * (graft.ops.Concurrently): each table touches only its own landing
+  * and archive directories, the shared audit appends are serialized by
+  * [[AuditLog]], and the watermarks are read once, before any table
+  * starts. Results stay in config order, and `run` returns only after
+  * every table has finished.
+  *
   * Scale notes: the extract-to-landing path is a single distributed
   * read→write with the incremental predicate pushed into the scan
   * (SourceConnector.readIncremental); the reference's
@@ -40,7 +47,16 @@ final class IngestionRunner(
     logger: PipelineLogger,
     clock: () => Timestamp) {
 
-  def loadTable(entry: LoadConfigEntry, runDate: LocalDate): TableLoadResult = {
+  def loadTable(entry: LoadConfigEntry, runDate: LocalDate): TableLoadResult =
+    load(entry, runDate, audit.latestWatermark(entry.datasource, entry.tablename))
+
+  private def isIncremental(entry: LoadConfigEntry): Boolean =
+    entry.loadtype.equalsIgnoreCase("incremental")
+
+  /** One table load; `since` (the audit watermark) is only evaluated
+    * for an incremental load. */
+  private def load(entry: LoadConfigEntry, runDate: LocalDate, since: => Timestamp)
+      : TableLoadResult = {
     val table = entry.tablename
     try {
       val archived = landing.archive(entry.datasource, table, runDate)
@@ -49,10 +65,8 @@ final class IngestionRunner(
 
       logger.info("Starting extraction", "extract", table)
       val df =
-        if (entry.loadtype.equalsIgnoreCase("incremental")) {
-          val since = audit.latestWatermark(entry.datasource, table)
-          source.readIncremental(spark, table, entry.watermark, since)
-        } else source.read(spark, table)
+        if (isIncremental(entry)) source.readIncremental(spark, table, entry.watermark, since)
+        else source.read(spark, table)
 
       // ONE source scan: the row count rides the write itself
       // (observe/CollectMetrics — ops/Observed) instead of a separate
@@ -81,11 +95,18 @@ final class IngestionRunner(
     }
   }
 
-  /** The main per-table loop over active config rows (:236-257). */
+  /** The main per-table loop over active config rows (:236-257), with
+    * the tables loaded concurrently; results in config order. */
   def run(config: Seq[LoadConfigEntry], datasource: String, runDate: LocalDate)
       : Seq[TableLoadResult] = {
     logger.info("Pipeline started", "start")
-    val results = LoadConfig.active(config, datasource).map(loadTable(_, runDate))
+    val active = LoadConfig.active(config, datasource)
+    val watermarks =
+      if (active.exists(isIncremental)) audit.latestWatermarks(datasource)
+      else Map.empty[String, Timestamp]
+    val results = graft.ops.Concurrently.all(active.map { e => () =>
+      load(e, runDate, watermarks.getOrElse(e.tablename, audit.DefaultWatermark))
+    })
     if (results.forall(_.status == "SUCCESS"))
       logger.success("Pipeline completed successfully", "end")
     else

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * hospitalA_mysqlToLanding.py:54-90). Events are buffered on the
   * driver and appended in one write at `flush()` — the reference's
   * per-event remote insert (:84-90) is a designed-out anti-pattern
-  * (SURVEY §4.3 #3).
+  * (SURVEY §4.3 #3). The buffer is guarded by the logger's lock, so
+  * units of work running concurrently can log into one logger.
   */
 final class PipelineLogger(spark: SparkSession, path: String, clock: () => Timestamp) {
   import spark.implicits._
@@ -17,7 +18,8 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
 
   def log(eventType: String, message: String, step: String,
       table: String = "", errorTrace: String = ""): Unit = {
-    buf += LogEvent(clock(), eventType, message, step, table, errorTrace)
+    val event = LogEvent(clock(), eventType, message, step, table, errorTrace)
+    synchronized { buf += event }
   }
 
   def info(msg: String, step: String, table: String = ""): Unit =
@@ -27,11 +29,13 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
   def error(msg: String, step: String, table: String, trace: String): Unit =
     log("ERROR", msg, step, table, trace)
 
-  def pending: Seq[LogEvent] = buf.toSeq
+  def pending: Seq[LogEvent] = synchronized(buf.toSeq)
 
   /** Append all buffered events as one write; clears the buffer. */
-  def flush(): Unit = if (buf.nonEmpty) {
-    buf.toSeq.toDS().write.mode(SaveMode.Append).parquet(path)
-    buf.clear()
+  def flush(): Unit = synchronized {
+    if (buf.nonEmpty) {
+      buf.toSeq.toDS().write.mode(SaveMode.Append).parquet(path)
+      buf.clear()
+    }
   }
 }

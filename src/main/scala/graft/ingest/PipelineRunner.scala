@@ -16,7 +16,12 @@ final case class StageResult(name: String, status: String, attempts: Int, error:
   *
   * Stages run strictly in order — the reference's DAG is a straight
   * chain (init → ingest hospitals → bronze → silver → gold), so a
-  * Seq is the whole dependency graph. Each stage gets `retries`
+  * Seq is the whole dependency graph. Inside a stage, independent
+  * units of work (a datasource's table loads, the silver tables, the
+  * gold marts) may run concurrently through graft.ops.Concurrently;
+  * such a stage returns, or throws its first failure, only after all
+  * of its units have finished, so a retry never overlaps a write of
+  * the failed attempt. Each stage gets `retries`
   * re-attempts separated by `retryDelayMs` (the Airflow retry_delay);
   * a stage that exhausts them halts the run (downstream stages are
   * skipped, as Airflow would skip downstream tasks).
